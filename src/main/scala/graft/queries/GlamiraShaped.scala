@@ -286,8 +286,8 @@ object GlamiraShaped {
       col("fx_ccy").as("currency_code"), col("usd_to_ccy"))
 
   /** The e2e gate's ModelGraph over the shaped inputs — factored out of
-    * the query so the E2eProbe measurement main can time individual node
-    * materializations of the identical DAG.
+    * the query so individual node materializations of the identical DAG
+    * can be resolved and timed on their own.
     */
   private[queries] def e2eGraph(s: SparkSession, dir: String): graft.glamira.ModelGraph = {
     val work = TempDirs.fresh("glamira_e2e")

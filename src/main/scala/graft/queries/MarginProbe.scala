@@ -1,28 +1,21 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Margin-gate calibration diagnostic (round 11): prints the assignment-
   * margin distribution of the shared IMI assignment over a corpus dir,
   * then the [[VectorOps.marginSweep]] — anchored-truth recall and
   * second-probe fraction per candidate τ — so the PROBE_MARGIN_T
-  * constant is a measurement, not a guess (the AssignProbe discipline).
+  * constant is a measurement, not a guess.
   *
-  * Usage: `sbt "runMain graft.queries.MarginProbe <sfDir> [tau,tau,...] [nt]"`
+  * Usage: `tools/runmain.sh graft.queries.MarginProbe <sfDir> [tau,tau,...] [nt]`
   * — pass `nt` as the third arg to sweep the NEAR-TWIN corpus
   * ([[VectorOps.ntAugmented]]) instead of the exact-duplicate one; the
   * round-13 τ calibration reads the `b_neartwin` band rows.
   */
 object MarginProbe {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master(
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "8388608")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = graft.GraftSession.builder().getOrCreate()
     val dir = args(0)
     val taus =
       if (args.length > 1 && args(1).nonEmpty) args(1).split(",").toSeq.map(_.toDouble)

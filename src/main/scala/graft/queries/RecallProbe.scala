@@ -1,30 +1,22 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
 /** Recall-decomposition diagnostic (round 12): prints
   * [[VectorOps.recallBands]] — anchored-truth recall of the margin-gated
   * IMI nprobe=2 candidate set, split by truth-pair cosine band and (on
   * synth_scale fixtures) same-copy locality — so the scale trend of the
   * blended ann_recall number can be adjudicated against the band the
   * production consumers (ANN_T=0.999 verification, SemDeDup curation)
-  * actually depend on. The MarginProbe/SnmProbe discipline: a working
-  * measurement main whose numbers land in SCALE.md, not a gate.
+  * actually depend on. A measurement main whose numbers land in
+  * SCALE.md, not a gate.
   *
-  * Usage: `sbt "runMain graft.queries.RecallProbe <sfDir> [copySpan] [tau] [nt]"`
+  * Usage: `tools/runmain.sh graft.queries.RecallProbe <sfDir> [copySpan] [tau] [nt]`
   * — copySpan 10000000 labels synth_scale copies, 0 disables the split;
   * pass `nt` as the fourth arg to decompose over the NEAR-TWIN corpus
   * ([[VectorOps.ntAugmented]], round 13).
   */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master(
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "8388608")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = graft.GraftSession.builder().getOrCreate()
     val dir = args(0)
     val copySpan = if (args.length > 1) args(1).toLong else 0L
     val tau = if (args.length > 2) args(2).toDouble else VectorOps.PROBE_MARGIN_T

@@ -1,12 +1,24 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-/** Writes PLANS.md: the formatted physical plan of each headline query, so
-  * the partitioning/pushdown/broadcast story is reviewable without running
-  * Spark. Usage: `sbt "runMain graft.tools.ExplainDump [sfDir] [outFile]"`.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
+
+/** Formatted physical plans, so the partitioning/pushdown/broadcast story
+  * is reviewable without running Spark.
+  *
+  *   - `Explain <sfDir> [outFile]` writes PLANS.md (or `outFile`) for the
+  *     [[headline]] set;
+  *   - `Explain <sfDir> <outDir> <suffix> <q1,q2,...>` writes one
+  *     `<outDir>/<q><suffix>.txt` per named query — the before/after plan
+  *     evidence under `plans/rNN/`.
+  *
+  * Run through `tools/runmain.sh`; PLANS.md is generated with
+  * `SPARK_GRAFT_CPUS=32`, so its partition-count literals do not depend
+  * on the box.
   */
-object ExplainDump {
+object Explain {
 
   val headline: Seq[String] = Seq(
     "q0_flagship_star",      // shuffle join + 3 broadcast dim hops
@@ -51,18 +63,39 @@ object ExplainDump {
     "curation_shard_export", // content-hash permutation → two-level prefix sum → shard+ordinal
     "ann_recall_neartwin")   // perturbed-twin corpora → two shared assignments → banded anchored recall
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  private def plan(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
+  def main(args: Array[String]): Unit = {
+    if (args.isEmpty || args.length == 3 || args.length > 4) {
+      System.err.println(
+        "usage: graft.tools.Explain <sfDir> [outFile] | <sfDir> <outDir> <suffix> <q1,q2,...>")
+      sys.exit(2)
+    }
+    val sfDir = args(0)
+    val spark = graft.GraftSession.builder().getOrCreate()
+    try {
+      if (args.length == 4) perQuery(spark, sfDir, args(1), args(2),
+        args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      else plansMd(spark, sfDir, args.lift(1).getOrElse("PLANS.md"))
+    } finally spark.stop()
+  }
+
+  private def perQuery(spark: SparkSession, sfDir: String, outDir: String,
+      suffix: String, names: Seq[String]): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      val text = plan(graft.SparkEntry.queries(name)(spark, sfDir))
+      val p = Paths.get(outDir, s"$name$suffix.txt")
+      Files.writeString(p, text)
+      println(s"wrote $p (${text.linesIterator.size} lines)")
+    }
+  }
+
+  private def plansMd(spark: SparkSession, sfDir: String, out: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
-    sb.append(s"Generated by `graft.tools.ExplainDump` against `$sfDir`. ")
+    sb.append(s"Generated by `graft.tools.Explain` against `$sfDir`. ")
     sb.append("Things to check per plan: `PushedFilters` reaching the scan, ")
     sb.append("`ReadSchema` pruned to referenced columns, `BroadcastHashJoin` ")
     sb.append("on dim joins, no `Exchange` where co-location was promised.\n")
@@ -104,13 +137,9 @@ object ExplainDump {
         |  hashpartitioning`, scan metadata `PushedFilters:`/`ReadSchema:`.
         |""".stripMargin)
     headline.foreach { name =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      sb.append(s"\n## $name\n\n```\n$plan```\n")
+      sb.append(s"\n## $name\n\n```\n${plan(graft.SparkEntry.queries(name)(spark, sfDir))}```\n")
     }
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)
+    Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out (${headline.size} plans)")
-    spark.stop()
   }
 }

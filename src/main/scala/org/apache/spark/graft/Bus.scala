@@ -1,0 +1,9 @@
+package org.apache.spark.graft
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus, which Spark keeps package-private. */
+object Bus {
+  /** Block until every posted listener event has been delivered. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

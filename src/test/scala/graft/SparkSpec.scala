@@ -5,7 +5,9 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session via
-  * getOrCreate; build.sbt forks tests with the JDK17 add-opens).
+  * getOrCreate; build.sbt forks tests with the JDK17 add-opens), built by
+  * [[GraftSession]] on 4 cores so test plans keep 4 partitions and every
+  * other setting matches `Verify` and `Bench`.
   *
   * Every suite drains [[graft.queries.ScratchCache]] on teardown: queries
   * register their scratch persists there expecting the CALLER to release
@@ -15,14 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * life of the test JVM (round-6 advice).
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = GraftSession.builder(4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   override protected def afterAll(): Unit = {

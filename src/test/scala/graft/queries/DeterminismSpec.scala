@@ -49,4 +49,30 @@ class DeterminismSpec extends SparkSpec {
       assert(r.getAs[Boolean]("approx_within_1pct"), s"sketch out of tolerance: $r")
     }
   }
+
+  test("Probe: cold and warm q1_agg runs report equal shuffle-write bytes and records") {
+    // the oracle tier (TESTDATA.md) beside the smoke tier this suite reads
+    val sf001 = java.nio.file.Paths.get(dir).resolveSibling("sf0.01").toString
+    // a slow listener ahead of Probe's on the bus delays every task-end
+    // event, so counters read before the bus drains would come back short
+    val slow = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Thread.sleep(50)
+    }
+    spark.sparkContext.addSparkListener(slow)
+    val Seq(cold, warm) =
+      try Seq.fill(2)(graft.Probe.measure(spark, sf001, "q1_agg"))
+      finally spark.sparkContext.removeSparkListener(slow)
+    assert(cold.tasks > 0 && warm.tasks > 0)
+    for (c <- Seq("shwrite_b", "shwrite_rec")) {
+      assert(cold.total(c) > 0, c)
+      assert(cold.total(c) === warm.total(c), c)
+    }
+    // the last stage reads back every shuffle byte and its task-end events
+    // come last, so a read that misses them shows here
+    for (r <- Seq(cold, warm)) {
+      assert(r.total("shread_b") === r.total("shwrite_b"))
+      assert(r.total("shread_rec") === r.total("shwrite_rec"))
+    }
+  }
 }

@@ -1,6 +1,8 @@
 #!/usr/bin/env bash
-# Direct-JVM runner for diagnostic mains (MarginProbe/RecallProbe/...):
-# same JDK17 add-opens + default-heap discipline as probe.sh, no sbt lock.
+# Direct-JVM runner for the mains (graft.Probe, graft.queries.MarginProbe,
+# graft.queries.RecallProbe, graft.tools.Explain, graft.Bench via probe.sh):
+# the build.sbt fork settings (JDK17 add-opens, default heap, UTC, UI off),
+# no sbt lock. Run `sbt compile` first; it reads target/scala-2.13/classes.
 #   tools/runmain.sh <mainClass> [args...]
 set -u
 MAIN="$1"; shift
